@@ -132,9 +132,7 @@ def ensure_event_log(spark) -> str:
     return out
 
 
-def run_replay(
-    spark, events_dir: str, table_dir: str, mode: str = "mor", warmup: int = 1, **cfg
-) -> dict:
+def run_replay(spark, events_dir: str, table_dir: str, warmup: int = 1, **cfg) -> dict:
     """Replay the full log; sustained rate excludes the first `warmup`
     epochs (JVM/codegen/python-worker spin-up, BASELINE.md protocol)."""
     from foundry_es_spark.plans import CdcPipeline, PipelineConfig
@@ -147,8 +145,6 @@ def run_replay(
             table_dir=table_dir,
             n_buckets=64,
             files_per_bucket=2,
-            salt_partitions=0,
-            merge_mode=mode,
             # C4 adaptive: the bench log concentrates 20% of events on one
             # hot repo; without this the hot bucket's payload rides in
             # files_per_bucket tasks — a straggler tail at wide parallelism
@@ -190,7 +186,7 @@ def run_replay(
         "median_epoch_sec": round(med, 3),
         "events_per_sec": round(epoch_events / med, 1),
         "final_rows": n_rows,
-        "mode": mode,
+        "mode": "mor",
     }
 
 
@@ -215,8 +211,6 @@ def run_streaming_replay(spark, events_dir: str, table_dir: str, warmup: int = 1
             table_dir=table_dir,
             n_buckets=64,
             files_per_bucket=2,
-            salt_partitions=0,
-            merge_mode="mor",
         ),
     )
     # one epoch's worth of files per trigger — same batch granularity as
@@ -317,7 +311,7 @@ def run_queries(spark, sf_dir: str) -> dict[str, float]:
     return timings
 
 
-def _replay_only(cpus: int, mode: str = "mor", warmup: int = 1) -> dict:
+def _replay_only(cpus: int, warmup: int = 1) -> dict:
     from foundry_es_spark.session import get_spark
 
     os.system("sync")  # drain prior runs' writeback before measuring
@@ -326,8 +320,7 @@ def _replay_only(cpus: int, mode: str = "mor", warmup: int = 1) -> dict:
     )
     events_dir = ensure_event_log(spark)
     res = run_replay(
-        spark, events_dir, os.path.join(BENCH_ROOT, f"table_c{cpus}_{mode}"),
-        mode=mode, warmup=warmup,
+        spark, events_dir, os.path.join(BENCH_ROOT, f"table_c{cpus}"), warmup=warmup
     )
     spark.stop()
     return {"cpus": cpus, **res}
@@ -481,7 +474,6 @@ def main() -> None:
     ap.add_argument("--replay-only", action="store_true")
     ap.add_argument("--cpus", type=int, default=CPUS)
     ap.add_argument("--skip-replay", action="store_true")
-    ap.add_argument("--mode", default="mor", choices=["mor", "cow"])
     ap.add_argument("--gen-only", action="store_true")
     ap.add_argument("--warmup", type=int, default=1)
     args = ap.parse_args()
@@ -500,7 +492,7 @@ def main() -> None:
         spark.stop()
         return
     if args.replay_only:
-        print(json.dumps(_replay_only(args.cpus, args.mode, warmup=args.warmup)))
+        print(json.dumps(_replay_only(args.cpus, warmup=args.warmup)))
         return
 
     from foundry_es_spark.session import get_spark
@@ -512,7 +504,7 @@ def main() -> None:
     replay = replication = streaming = None
     if not args.skip_replay:
         events_dir = ensure_event_log(spark)
-        replay = run_replay(spark, events_dir, os.path.join(BENCH_ROOT, "table_main"), mode=args.mode)
+        replay = run_replay(spark, events_dir, os.path.join(BENCH_ROOT, "table_main"))
         # Secondary metric: replication shape (no enrichment) through the
         # fused task-writer sink — the pure binlog->lake bandwidth of the
         # engine, separated from the DATS-enrichment compute the default
@@ -520,7 +512,7 @@ def main() -> None:
         # the r1 table lacked).
         replication = run_replay(
             spark, events_dir, os.path.join(BENCH_ROOT, "table_repl"),
-            mode="mor", normalize=False, fused_write=True,
+            normalize=False,
         )
         streaming = run_streaming_replay(
             spark, events_dir, os.path.join(BENCH_ROOT, "table_stream")

@@ -208,18 +208,12 @@ def dats_nested_expr(content_col: str | Column = "content") -> Column:
     return F.when(c.isNotNull(), F.struct(ids.alias("identifiers"), dates.alias("dates")))
 
 
-def with_normalized_columns(
-    df: DataFrame, content_col: str = "content", include_meta: bool = True
-) -> DataFrame:
+def with_normalized_columns(df: DataFrame, content_col: str = "content") -> DataFrame:
     """The full T1+T2+T3 enhancement applied to a change batch.
 
     Cheap columns native (sha256, n_lines, n_chars, lang); the text-analysis
     struct via ONE Arrow-vectorized UDF call. D tombstones (null content)
     produce null derived columns.
-
-    ``include_meta=False``: the caller's compaction kernel computes `meta`
-    in its own Arrow pass (fused pipeline) — only the JVM-native columns
-    are added here, so the plan stays whole-stage-codegen end to end.
     """
     c = F.col(content_col)
     out = (
@@ -228,9 +222,9 @@ def with_normalized_columns(
         .withColumn("n_chars", F.when(c.isNotNull(), F.length(c)).cast("long"))
         .withColumn("lang", normalize_lang("lang"))
     )
-    if include_meta and "meta" not in df.columns:
-        # compaction strategies that already ran an Arrow pass (sorted,
-        # operators/cdc.py) emit meta there; don't pay a second transfer
+    if "meta" not in df.columns:
+        # the sorted compaction (operators/cdc.py) already ran an Arrow
+        # pass and emitted meta there; don't pay a second transfer
         out = out.withColumn("meta", F.when(c.isNotNull(), dats_normalize_meta(c)))
     if "dats" not in df.columns:
         out = out.withColumn("dats", dats_nested_expr(content_col))

@@ -1,12 +1,12 @@
 """CDC core operators (SURVEY.md §2.2).
 
-C1 latest-wins compaction + C2 op fold: one shuffle via
-``groupBy(key).agg(max_by(struct(*), seq))`` — preferred over
-window+row_number at scale because partial aggregation (map-side combine)
-collapses hot keys before the shuffle, so a key with 10^6 updates in a
-batch ships O(partitions) rows, not 10^6. The optional explicit two-phase
-salting (C4) covers engines/configs where a single reduce key would still
-concentrate on one task.
+C1 latest-wins compaction + C2 op fold: ONE payload shuffle straight into
+the sink's ``(bucket, salt)`` write layout, then a vectorized boundary
+dedup over the key-sorted partitions (:func:`compact_sorted_partitions`).
+C4 hot-key salting spreads a hot bucket over more slices of that same
+exchange. Patch events (op='P') fold through one map-side combinable
+aggregate instead (:func:`compact_latest_patch`), because net patches
+still need the stored row before they are full images.
 
 Reference analogue: the ingestion service's duplicate/update check and
 status classification [F-ES: DocumentIngestionService — UNVERIFIED,
@@ -44,41 +44,6 @@ def validate_split(events: DataFrame, allow_patch: bool = False) -> tuple[DataFr
     return events.where(valid), events.where(~F.coalesce(valid, F.lit(False)))
 
 
-def compact_latest(
-    events: DataFrame,
-    key_cols: list[str] | None = None,
-    order_col: str = "seq",
-    salt_partitions: int = 0,
-) -> DataFrame:
-    """C1+C2: keep only the max-`order_col` event per key; the surviving
-    row's op is the net effect (I/U ⇒ upsert, D ⇒ delete) fed to MERGE.
-
-    salt_partitions > 0 adds an explicit two-phase aggregation: local
-    max_by within (key, salt) slices, then global max_by per key — the
-    hot-key salting demanded by BASELINE.json north_rule even though
-    map-side combine already bounds skew for this aggregation shape.
-    """
-    key_cols = key_cols or KEY_COLS
-    payload = F.struct(*[F.col(c) for c in events.columns])
-    if salt_partitions > 0:
-        salt = F.pmod(F.col(order_col), F.lit(salt_partitions)).alias("_salt")
-        local = (
-            events.groupBy(*key_cols, salt)
-            .agg(F.max_by(payload, F.col(order_col)).alias("r"))
-            .select(*key_cols, "r")
-        )
-        return (
-            local.groupBy(*key_cols)
-            .agg(F.max_by(F.col("r"), F.col(f"r.{order_col}")).alias("r"))
-            .select("r.*")
-        )
-    return (
-        events.groupBy(*key_cols)
-        .agg(F.max_by(payload, F.col(order_col)).alias("r"))
-        .select("r.*")
-    )
-
-
 def compact_latest_patch(
     events: DataFrame,
     key_cols: list[str] | None = None,
@@ -96,8 +61,8 @@ def compact_latest_patch(
     - P against a row that does not exist is a no-op (Debezium's
       behavior for a patch on a missing document).
 
-    One aggregate, one shuffle, map-side combinable — the same scale
-    shape as :func:`compact_latest`. Per non-key column the winner is
+    One aggregate, one shuffle, map-side combinable: partial aggregation
+    collapses hot keys before the shuffle. Per non-key column the winner is
     ``max_by(col, seq)`` over the events that SET that column (all
     I/U/D rows, plus P rows where the column is non-null; ``max_by``
     ignores null ordering keys, pinned by test_patch). The net op is
@@ -132,39 +97,12 @@ def compact_latest_patch(
     return out.select(*select)
 
 
-def compact_latest_winners(
-    events: DataFrame,
-    key_cols: list[str] | None = None,
-    order_col: str = "seq",
-    broadcast_winners: bool = True,
-) -> DataFrame:
-    """C1+C2 alternative physical strategy: compact WITHOUT shuffling the
-    payload.
-
-    The wide ``content`` column dominates epoch I/O; ``compact_latest``'s
-    groupBy ships it through a full shuffle just to discard ~30% of rows.
-    Here the shuffle only carries ``(key, seq)`` (the winners aggregation —
-    parquet column pruning means the scan for it reads a few narrow
-    columns), and the payload is then joined back against the original scan
-    on ``(key, seq)``: a broadcast hash join when the per-epoch key set fits
-    (local sandbox, and any cluster epoch up to ~10^7 keys), else a regular
-    join that still ships content only once. Requires `order_col` unique per
-    key (the engine's global-seq contract).
-    """
-    key_cols = key_cols or KEY_COLS
-    winners = events.groupBy(*key_cols).agg(F.max(order_col).alias(order_col))
-    if broadcast_winners:
-        winners = F.broadcast(winners)
-    return events.join(winners, on=[*key_cols, order_col], how="inner")
-
-
 def compact_sorted_partitions(
     events: DataFrame,
     n_buckets: int,
     files_per_bucket: int = 1,
     key_cols: list[str] | None = None,
     order_col: str = "seq",
-    n_salts: int | None = None,
     emit_meta: bool = False,
     metrics_acc=None,
     num_partitions: int | None = None,
@@ -173,8 +111,8 @@ def compact_sorted_partitions(
     hot_salts: int = 0,
     bucket_acc=None,
 ) -> DataFrame:
-    """C1+C2 physical strategy "sorted": ONE payload shuffle, straight to
-    the sink's write layout.
+    """C1+C2 latest-wins compaction: ONE payload shuffle, straight to the
+    sink's write layout.
 
     Events are repartitioned by ``(bkt, salt)`` — the exact layout the lake
     table writes — and sorted within partitions by ``(key, seq)``. Because
@@ -206,11 +144,12 @@ def compact_sorted_partitions(
     ``hot_buckets``/``hot_salts`` — adaptive C4: buckets named in
     ``hot_buckets`` (detected by the caller from the PREVIOUS epoch's
     per-bucket row counts, see ``bucket_acc``) salt over ``hot_salts``
-    slices instead of ``n_salts``. With bucket = hash(repo), one hot repo
-    is one hot bucket: under the flat salt its 10–20 %-of-the-epoch
-    payload sits in ``n_salts`` tasks (a straggler tail that caps stage
-    scaling at wide parallelism — the per-task share must be ~1/width,
-    not 1/n_salts of the hot fraction), while ``hot_salts`` slices put it
+    slices instead of ``files_per_bucket``. With bucket = hash(repo), one
+    hot repo is one hot bucket: under the flat salt its 10–20 %-of-the-epoch
+    payload sits in ``files_per_bucket`` tasks (a straggler tail that caps
+    stage scaling at wide parallelism — the per-task share must be
+    ~1/width, not 1/files_per_bucket of the hot fraction), while
+    ``hot_salts`` slices put it
     back on the task-size median. Salt stays a pure function of
     (bucket, path) for a given hot set, so every key still lands wholly
     in one partition and dedup correctness is unchanged; only task sizing
@@ -230,14 +169,12 @@ def compact_sorted_partitions(
 
     # C4 hot-key salting: the salt count sets COMPUTE parallelism for a hot
     # bucket (one giant repo spreads over n_salts partitions), independent
-    # of the write layout (`files_per_bucket` only shapes file counts —
-    # `partitionBy(bkt)` splits a task's rows per bucket regardless of how
-    # many (bkt, salt) combos the task carries).
-    if n_salts is None:
-        n_salts = max(1, files_per_bucket)
-    base_salt = F.pmod(F.xxhash64(key_cols[-1]), F.lit(max(1, n_salts)))
+    # of the write layout (`partitionBy(bkt)` splits a task's rows per
+    # bucket regardless of how many (bkt, salt) combos the task carries).
+    n_salts = max(1, files_per_bucket)
+    base_salt = F.pmod(F.xxhash64(key_cols[-1]), F.lit(n_salts))
     hot_buckets = sorted(set(hot_buckets)) if hot_buckets else []
-    if hot_buckets and hot_salts > max(1, n_salts):
+    if hot_buckets and hot_salts > n_salts:
         salt = F.when(
             F.col("bkt").isin(hot_buckets),
             F.pmod(F.xxhash64(key_cols[-1]), F.lit(hot_salts)),
@@ -257,9 +194,7 @@ def compact_sorted_partitions(
     # independent of N — N only sets compute parallelism. Callers size N
     # from the batch's row count (pipeline: rows / rows_per_task, clamped
     # to the grid) so tiny epochs don't pay the full grid's task overhead.
-    grid = n_buckets * max(1, n_salts) + len(hot_buckets) * max(
-        0, hot_salts - max(1, n_salts)
-    )
+    grid = n_buckets * n_salts + len(hot_buckets) * (hot_salts - n_salts)
     n_parts = min(grid, num_partitions) if num_partitions else grid
     parted = events.repartition(
         max(1, n_parts), F.col("bkt"), F.col("_salt")

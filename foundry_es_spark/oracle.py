@@ -79,6 +79,11 @@ def fold_events_multi(phases: list[pd.DataFrame], extra_cols: list[str]) -> pd.D
             p = p.rename(columns={"meta_license": "license"})
         norm.append(p)
     allp = pd.concat(norm, ignore_index=True)
+    # a phase that lacks a string column leaves NaN after concat; the
+    # engine reads those cells back as None
+    for c in allp.columns:
+        if allp[c].dtype == object:
+            allp[c] = allp[c].where(allp[c].notna(), None)
     if "n_stars" in allp.columns:
         allp["n_stars"] = allp["n_stars"].astype("Int64")
     return fold_events(allp, extra_cols=extra_cols)

@@ -29,9 +29,7 @@ from foundry_es_spark.functions.normalize import (
 from foundry_es_spark.lake import LakeTable
 from foundry_es_spark.lake import log as commitlog
 from foundry_es_spark.operators.cdc import (
-    compact_latest,
     compact_latest_patch,
-    compact_latest_winners,
     compact_sorted_partitions,
     suppress_unchanged,
     validate_split,
@@ -172,27 +170,17 @@ class PipelineConfig:
     table_dir: str
     n_buckets: int = 16
     n_parts: int = 8                 # stream partitions for offset tracking
-    salt_partitions: int = 0         # C4 two-phase compaction (0 = map-side combine only)
     files_per_bucket: int = 1        # >1 parallelizes writes of hot buckets
     normalize: bool = True           # T1/T2 enhancement stage
     suppress_no_ops: bool = False    # C3 (extra state read per epoch)
     rename_map: dict[str, str] = field(default_factory=dict)  # C7 declared renames
-    merge_mode: str = "mor"          # "mor" (delta append + compaction) | "cow" (rewrite touched buckets)
-    compact_threshold: int = 8       # mor: compact a bucket once it holds this many delta generations
-    compact_strategy: str = "sorted" # "sorted" (one shuffle straight to write layout, pandas dedup)
-                                     # | "winners" (key-only shuffle + payload join-back)
-                                     # | "agg" (max_by full shuffle)
-    record_partition_metrics: bool = False  # §5.2 straggler evidence in lineage (sorted strategy)
-    fused_write: bool | str = "auto" # mor+sorted: tasks write the delta parquet directly
-                                     # (Iceberg task-writer shape; no JVM re-encode, no
-                                     # output committer). "auto" = only when normalize is
-                                     # off: the fused sink needs the derived columns
-                                     # computed BEFORE the compaction exchange, and
-                                     # shipping dats/sha through the shuffle costs more
-                                     # than the fused write saves (measured ~+1.5s vs
-                                     # -0.4s per 100k epoch); replication-shape epochs
-                                     # (no enrichment) run ~25% faster fused.
-    compact_rows_per_task: int = 50_000  # sorted strategy: target rows per compaction task
+    merge_mode: str = "mor"          # the one write path: delta append + selective
+                                     # compaction; any other value raises
+    compact_threshold: int = 8       # compact a bucket once it holds this many delta generations
+    compact_strategy: str = "sorted" # the one compaction kernel (one shuffle straight to
+                                     # the write layout); any other value raises
+    record_partition_metrics: bool = False  # §5.2 straggler evidence in lineage
+    compact_rows_per_task: int = 50_000  # target rows per compaction task
                                          # (sets explicit partition count = rows/target,
                                          # clamped to the (bucket x salt) grid)
     hot_bucket_salts: int = 0        # C4 adaptive: buckets whose input-row share in the
@@ -226,8 +214,8 @@ class PipelineConfig:
                                      # an EARLIER epoch against the stored row via a
                                      # bucket-pruned selective read; a patch for a
                                      # key that does not exist is a counted no-op
-                                     # (n_orphan_patches in lineage). Uses the "agg"
-                                     # fold shape (fused/sorted sink disabled);
+                                     # (n_orphan_patches in lineage). Uses the one-
+                                     # aggregate patch fold on the JVM writer;
                                      # incompatible with suppress_no_ops (content
                                      # digest can't witness non-content patches).
     patch_resolve: str = "write"     # WHERE net-'P' keys resolve against the base
@@ -289,11 +277,18 @@ class CdcPipeline:
             raise ValueError(
                 f"patch_resolve must be 'write' or 'merge', got {config.patch_resolve!r}"
             )
-        if config.patch_resolve == "merge" and config.merge_mode != "mor":
+        # One physical path per shape; the two fields stay so existing
+        # callers that spell out the defaults keep working.
+        if config.merge_mode != "mor":
             raise ValueError(
-                "patch_resolve='merge' defers resolution to the MoR merge; "
-                "merge_mode='cow' rewrites full rows per epoch and must "
-                "resolve at write"
+                f"merge_mode={config.merge_mode!r}: the copy-on-write path was "
+                "removed; only 'mor' is supported"
+            )
+        if config.compact_strategy != "sorted":
+            raise ValueError(
+                f"compact_strategy={config.compact_strategy!r}: the "
+                "'winners'/'agg' compaction paths were removed; only 'sorted' "
+                "is supported"
             )
 
     # ------------------------------------------------------------- table
@@ -395,8 +390,8 @@ class CdcPipeline:
 
         Scale shape: the selective read is bucket-pruned via the RAW P
         events (bucket is a pure function of repo — the same pattern as
-        suppress_no_ops / the CoW touched-buckets hint), so the state read
-        costs O(patched buckets), never a table scan. Orphan patches — key
+        suppress_no_ops), so the state read costs O(patched buckets), never
+        a table scan. Orphan patches — key
         absent or tombstoned — are no-ops (Debezium semantics), dropped
         and counted by an Observation riding the merge job
         (``n_orphan_patches`` in the epoch's lineage info)."""
@@ -536,13 +531,9 @@ class CdcPipeline:
                 _, dead = validate_split(batch, self.cfg.patch_ops)
                 self._write_dead_letters(dead, epoch_id)
         # Footer-hint path: validity is counted by an Observation riding the
-        # main job (pre-filter), so no extra scan happens either way. Under
-        # the "winners" strategy the observed subtree executes twice
-        # (broadcast build + probe) and would double-count, so that case
-        # derives the count from the quarantine split instead (see _info).
-        use_obs = offsets_hint is not None and self.cfg.compact_strategy != "winners"
-        obs_pre = Observation() if use_obs else None
-        if use_obs:
+        # main job (pre-filter), so no extra scan happens either way.
+        obs_pre = Observation() if offsets_hint is not None else None
+        if obs_pre is not None:
             batch = batch.observe(
                 obs_pre,
                 F.sum((~F.coalesce(ok, F.lit(False))).cast("int")).alias("n_dead"),
@@ -559,13 +550,15 @@ class CdcPipeline:
             "max_seq": max_seq,
             "offsets": offsets,
         }
-        fw = self.cfg.fused_write
         from foundry_es_spark.lake.backend import supports_fused_sink
 
+        # One physical path per shape, chosen from the shape flags and the
+        # backend. Replication (no enrichment) runs on the fused task-writer
+        # sink. Enriched stays on the JVM writer: fused, it must ship the
+        # derived columns through the compaction exchange, which costs
+        # Python-worker memory (BENCH/BASELINE.md, 4-core section).
         if (
-            (fw is True or (fw == "auto" and not self.cfg.normalize))
-            and self.cfg.merge_mode == "mor"
-            and self.cfg.compact_strategy == "sorted"
+            not self.cfg.normalize
             and not self.cfg.suppress_no_ops
             and not self.cfg.patch_ops
             and supports_fused_sink(table)
@@ -573,24 +566,19 @@ class CdcPipeline:
         ):
             return self._apply_epoch_fused(
                 table, raw_batch, valid, epoch_id, n_events, base_info,
-                offsets_hint, obs_pre, t0, stage_sec, nb,
+                obs_pre, t0, stage_sec, nb,
             )
 
-        # C1+C2 — three physical strategies for the same logical operator
-        # (operators/cdc.py): "sorted" ships the payload exactly once,
-        # straight into the sink's (bucket, salt) write layout; "winners"
-        # keeps content out of the compaction shuffle via a key-only
-        # aggregate + join-back; "agg" is the classic max_by groupBy.
-        pre_partitioned = False
+        # C1+C2 (operators/cdc.py): the sorted compaction ships the payload
+        # exactly once, straight into the sink's (bucket, salt) write layout.
         part_acc = None
         bucket_acc = None
         if self.cfg.patch_ops:
-            # patch fold: same one-shuffle hash-aggregate shape as "agg"
-            # (map-side combinable); the sorted/fused layouts don't apply
-            # because net-'P' keys take a join against the stored rows
-            # before they are full rows at all.
+            # patch fold: a one-shuffle, map-side combinable hash aggregate;
+            # the sorted layout doesn't apply because net-'P' keys take a
+            # join against the stored rows before they are full rows at all.
             compacted = compact_latest_patch(valid)
-        elif self.cfg.compact_strategy == "sorted":
+        else:
             if self.cfg.record_partition_metrics:
                 from foundry_es_spark.operators.metrics import partition_metrics_acc
 
@@ -607,13 +595,6 @@ class CdcPipeline:
                 hot_salts=self.cfg.hot_bucket_salts,
                 bucket_acc=bucket_acc,
             )
-            # cow's merge_upsert re-shuffles on write (it must union with
-            # the read-back target), so only mor can claim the layout.
-            pre_partitioned = self.cfg.merge_mode == "mor"
-        elif self.cfg.compact_strategy == "winners":
-            compacted = compact_latest_winners(valid)
-        else:
-            compacted = compact_latest(valid, salt_partitions=self.cfg.salt_partitions)
 
         # C7 — evolve the table to accept this batch's payload shape.
         payload_fields = [f for f in batch.schema.fields if f.name not in ENVELOPE_COLS]
@@ -714,8 +695,8 @@ class CdcPipeline:
             vals = observed_metrics(obs, n_keys=0, n_deletes=0)
             # the main job has finished by now — record its wall so the
             # lineage row carries the write stage (the outer assignment
-            # after append_delta/merge_upsert would be too late for the
-            # committed epoch_info copy)
+            # after append_delta would be too late for the committed
+            # epoch_info copy)
             stage_sec["merge_write"] = round(time.monotonic() - t2, 3)
             out = {
                 **info,
@@ -728,17 +709,11 @@ class CdcPipeline:
                 from foundry_es_spark.operators.metrics import summarize_partitions
 
                 out["partition_metrics"] = summarize_partitions(part_acc.value)
-            if offsets_hint is not None:
-                if obs_pre is not None:
-                    n_dead = int(observed_metrics(obs_pre, n_dead=0)["n_dead"] or 0)
-                    if n_dead:
-                        _, dead = validate_split(raw_batch, self.cfg.patch_ops)
-                        self._write_dead_letters(dead, epoch_id)
-                else:
-                    # winners strategy: Observation would double-count, so
-                    # the quarantine split itself is the source of truth.
+            if obs_pre is not None:
+                n_dead = int(observed_metrics(obs_pre, n_dead=0)["n_dead"] or 0)
+                if n_dead:
                     _, dead = validate_split(raw_batch, self.cfg.patch_ops)
-                    n_dead = self._write_dead_letters(dead, epoch_id)
+                    self._write_dead_letters(dead, epoch_id)
                 out["n_dead_letters"] = n_dead
             if patch_obs is not None:
                 out["n_orphan_patches"] = int(
@@ -750,53 +725,32 @@ class CdcPipeline:
             info_out.update(out)
             return out
 
-        if self.cfg.merge_mode == "mor":
-            merge_stats = table.append_delta(
-                merge_batch,
-                fence=(self.cfg.pipeline_id, epoch_id),
-                files_per_bucket=self.cfg.files_per_bucket,
-                info=_info,
-                pre_partitioned=pre_partitioned,
-            )
-        else:
-            # CoW: derive the touched buckets from the RAW valid batch
-            # (bucket is a pure function of repo) — the same bucket-pruned
-            # pattern as suppress_no_ops above. Computing them from
-            # merge_batch would re-execute the whole compaction kernel
-            # (mapInArrow is a projection barrier).
-            from foundry_es_spark.lake.table import bucket_expr
-
-            touched = [
-                r[0]
-                for r in valid.select(
-                    bucket_expr(nb).alias("b")
-                ).distinct().collect()
-            ]
-            merge_stats = table.merge_upsert(
-                merge_batch,
-                fence=(self.cfg.pipeline_id, epoch_id),
-                files_per_bucket=self.cfg.files_per_bucket,
-                info=_info,
-                touched_buckets=touched,
-            )
+        merge_stats = table.append_delta(
+            merge_batch,
+            fence=(self.cfg.pipeline_id, epoch_id),
+            files_per_bucket=self.cfg.files_per_bucket,
+            info=_info,
+            # the sorted compaction already put rows in the (bucket, salt)
+            # write layout; the patch fold did not
+            pre_partitioned=not self.cfg.patch_ops,
+        )
         stage_sec["merge_write"] = round(time.monotonic() - t2, 3)
         self._fold_bucket_acc(bucket_acc)
         info = {**info, **{k: info_out[k] for k in ("n_keys", "n_deletes", "n_dead_letters", "n_orphan_patches") if k in info_out}}
-        if self.cfg.merge_mode == "mor":
-            merge_stats = self._maybe_compact(table, merge_stats, stage_sec)
+        merge_stats = self._maybe_compact(table, merge_stats, stage_sec)
         return {**info, **merge_stats, "stage_sec": stage_sec, "skipped": False}
 
     def _apply_epoch_fused(
         self, table, raw_batch, valid, epoch_id, n_events, base_info,
-        offsets_hint, obs_pre, t0, stage_sec, n_buckets: int | None = None,
+        obs_pre, t0, stage_sec, nb: int,
     ) -> dict:
-        """Fused epoch body (mor + sorted): ONE job whose tasks end at the
-        delta parquet files. Projection to the final table schema, sha256 /
-        DATS enrichment (JVM, pre-shuffle), the (bucket, salt) exchange,
-        Arrow dedup + meta, and the parquet encode all happen inside the
-        job; the driver collects per-file metadata and swaps the commit —
-        the Iceberg writer/commit split. No Python→JVM payload return, no
-        second encode, no rename-based committer in the epoch hot path."""
+        """Fused epoch body (replication shape): ONE job whose tasks end at
+        the delta parquet files. Projection to the final table schema, the
+        (bucket, salt) exchange, Arrow dedup and the parquet encode all
+        happen inside the job; the driver collects per-file metadata and
+        swaps the commit — the Iceberg writer/commit split. No Python→JVM
+        payload return, no second encode, no rename-based committer in the
+        epoch hot path."""
         part_acc = None
         if self.cfg.record_partition_metrics:
             from foundry_es_spark.operators.metrics import partition_metrics_acc
@@ -808,26 +762,16 @@ class CdcPipeline:
         ]
         table.evolve_for_batch(T.StructType(payload_fields), self.cfg.rename_map)
 
-        enriched = (
-            with_normalized_columns(valid, include_meta=False)
-            if self.cfg.normalize
-            else valid
-        )
         select = []
         for uf in table.schema_fields():
-            if self.cfg.normalize and uf.name == "meta":
-                continue  # the compaction kernel appends meta in its Arrow pass
-            if uf.name in enriched.columns:
+            if uf.name in valid.columns:
                 select.append(F.col(uf.name).cast(uf.type).alias(uf.name))
             else:
                 select.append(F.lit(None).cast(uf.type).alias(uf.name))
-        merge_batch = enriched.select(
+        merge_batch = valid.select(
             *select, F.col("seq").alias("_seq"), F.col("op").alias("_op")
         )
 
-        nb = n_buckets if n_buckets is not None else int(
-            getattr(table, "n_buckets", 0) or self.cfg.n_buckets
-        )
         # schema version the write job runs under (post-evolve) — passed to
         # commit_delta_files as `expect` so the committed file metadata
         # matches what was physically written, even if a concurrent writer
@@ -841,7 +785,6 @@ class CdcPipeline:
             nb,
             self.cfg.files_per_bucket,
             order_col="_seq",
-            emit_meta=self.cfg.normalize,
             metrics_acc=part_acc,
             num_partitions=self._compact_partitions(n_events),
             sink_spec={
@@ -892,11 +835,9 @@ class CdcPipeline:
         # S7 quarantine BEFORE the fencing commit (crash after the commit
         # must never lose dead letters — the epoch would be skipped on
         # resume and the quarantine never written).
-        if offsets_hint is not None and obs_pre is not None:
+        if obs_pre is not None:
             n_dead = int(observed_metrics(obs_pre, n_dead=0)["n_dead"] or 0)
             if n_dead:
-                from foundry_es_spark.operators.cdc import validate_split
-
                 _, dead = validate_split(raw_batch)
                 self._write_dead_letters(dead, epoch_id)
             info["n_dead_letters"] = n_dead

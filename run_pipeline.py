@@ -25,12 +25,8 @@ def main() -> None:
     ap.add_argument("--pipeline-id", default="stream")
     ap.add_argument("--n-buckets", type=int, default=64)
     ap.add_argument("--files-per-bucket", type=int, default=2)
-    ap.add_argument("--merge-mode", default="mor", choices=["mor", "cow"])
-    ap.add_argument("--compact-strategy", default="sorted", choices=["sorted", "winners", "agg"])
     ap.add_argument("--no-normalize", action="store_true",
                     help="replication shape: skip DATS enrichment (enables the fused task-writer sink)")
-    ap.add_argument("--fused-write", default="auto", choices=["auto", "on", "off"],
-                    help="mor+sorted task-writer sink; auto = only without enrichment")
     ap.add_argument("--hot-bucket-salts", type=int, default=0,
                     help="C4 adaptive skew: salt buckets that exceeded 4x the median "
                          "input rows last epoch over this many slices (0 = flat)")
@@ -62,10 +58,7 @@ def main() -> None:
             table_dir=args.table_dir,
             n_buckets=args.n_buckets,
             files_per_bucket=args.files_per_bucket,
-            merge_mode=args.merge_mode,
-            compact_strategy=args.compact_strategy,
             normalize=not args.no_normalize,
-            fused_write={"auto": "auto", "on": True, "off": False}[args.fused_write],
             record_partition_metrics=args.partition_metrics,
             hot_bucket_salts=args.hot_bucket_salts,
             patch_ops=args.patch_ops,

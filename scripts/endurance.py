@@ -112,9 +112,7 @@ def main() -> None:
         table_dir=table_dir,
         n_buckets=64,
         files_per_bucket=2,
-        merge_mode="mor",
         normalize=False,
-        fused_write=True,
         hot_bucket_salts=8,
         compact_threshold=1 << 30,   # the cron owns compaction
         concurrent_writers=not args.no_maintenance,

@@ -8,6 +8,14 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from foundry_es_spark.session import get_spark  # noqa: E402
 
 
+def pytest_configure(config):
+    # None vs NaN in a frame comparison is a FutureWarning today and an
+    # assertion failure in a later pandas: fail on it now
+    config.addinivalue_line(
+        "filterwarnings", "error:Mismatched null-like values:FutureWarning"
+    )
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark(

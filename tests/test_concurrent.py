@@ -237,8 +237,7 @@ def test_pipeline_epochs_race_maintenance_cron(spark, tmp_path):
     ev = gen_change_events(spark, n_events=4000, n_keys=400, lines_mod=10)
     write_event_log(ev, events_dir, epoch_size=1000)
 
-    cfg = dict(n_buckets=4, files_per_bucket=1, salt_partitions=0,
-               merge_mode="mor")
+    cfg = dict(n_buckets=4, files_per_bucket=1)
     pipe = CdcPipeline(spark, PipelineConfig(
         pipeline_id="race", table_dir=str(tmp_path / "t"),
         concurrent_writers=True, **cfg,

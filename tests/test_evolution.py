@@ -142,7 +142,6 @@ def test_skew_replay_with_salting(spark, tmp_path):
         PipelineConfig(
             pipeline_id="skew",
             table_dir=str(tmp_path / "table"),
-            salt_partitions=8,
             files_per_bucket=4,
             record_partition_metrics=True,
             # small epochs: force a real multi-task grid (1000-row epochs /

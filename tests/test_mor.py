@@ -1,17 +1,22 @@
-"""Merge-on-read delta mode: equivalence with copy-on-write + compaction.
+"""Merge-on-read delta mode: compaction is a pure physical-layout change.
 
 The MoR path (LakeTable.append_delta + read-time generation merge +
-selective bucket compaction) is the 10^10-event scale strategy; these tests
-pin that it is a pure physical-layout change — byte-identical final state
-with the CoW MERGE path, across resume and compaction boundaries.
+selective bucket compaction) is the engine's one write path; these tests
+pin byte-identical final state with and without compaction, equal to the
+pandas fold oracle, across resume and compaction boundaries.
 """
 
 from __future__ import annotations
 
+import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from foundry_es_spark.fixtures import gen_change_events, write_event_log
+from foundry_es_spark.oracle import fold_events
 from foundry_es_spark.plans import CdcPipeline, PipelineConfig
+
+ORACLE_COLS = ["repo", "path", "commit", "lang", "content_sha256"]
 
 
 def _digest(df):
@@ -25,6 +30,20 @@ def _digest(df):
     return (row["s"], row["n"])
 
 
+def _assert_matches_oracle(df, events_pdf):
+    """Final table state == the pandas fold of the log (the oracle shares
+    no code with the engine). Tables without the enrichment columns are
+    compared on sha2(content)."""
+    if "content_sha256" not in df.columns:
+        df = df.withColumn("content_sha256", F.sha2("content", 256))
+    got = (
+        df.select(*ORACLE_COLS).toPandas()
+        .sort_values(["repo", "path"]).reset_index(drop=True)
+    )
+    exp = fold_events(events_pdf)[ORACLE_COLS].reset_index(drop=True)
+    pd.testing.assert_frame_equal(got, exp)
+
+
 def _replay(spark, tmp, name, events_dir, **cfg):
     pipe = CdcPipeline(
         spark,
@@ -34,28 +53,41 @@ def _replay(spark, tmp, name, events_dir, **cfg):
     return pipe
 
 
-def test_mor_equals_cow_final_state(spark, tmp_path):
+def test_mor_compaction_preserves_final_state(spark, tmp_path):
+    """Replay with in-epoch compaction == replay without it (full-column
+    digest, derived columns included), and both == the fold oracle."""
     tmp = str(tmp_path)
     ev = gen_change_events(spark, n_events=6000, n_keys=900, hot_frac=0.3)
     write_event_log(ev, f"{tmp}/events", epoch_size=1000)
 
-    cow = _replay(spark, tmp, "cow", f"{tmp}/events", merge_mode="cow")
-    mor = _replay(spark, tmp, "mor", f"{tmp}/events", merge_mode="mor", compact_threshold=3)
-    assert _digest(cow.table.read()) == _digest(mor.table.read())
+    compacted = _replay(spark, tmp, "compacted", f"{tmp}/events", compact_threshold=3)
+    raw = _replay(spark, tmp, "raw", f"{tmp}/events", compact_threshold=10**9)
+    assert _digest(compacted.table.read()) == _digest(raw.table.read())
+    pdf = ev.toPandas()
+    _assert_matches_oracle(compacted.table.read(), pdf)
+    _assert_matches_oracle(raw.table.read(), pdf)
     # compaction actually ran and bounded the per-bucket delta generations
-    gens = mor.table.bucket_delta_generations()
+    gens = compacted.table.bucket_delta_generations()
     assert max(gens.values(), default=0) < 3
+    assert max(raw.table.bucket_delta_generations().values(), default=0) >= 3
 
 
 def test_mor_without_compaction_still_correct(spark, tmp_path):
+    """Live delta generations read correctly, and compacting them after
+    the fact leaves the full-column digest unchanged."""
     tmp = str(tmp_path)
     ev = gen_change_events(spark, n_events=4000, n_keys=500)
     write_event_log(ev, f"{tmp}/events", epoch_size=800)
-    cow = _replay(spark, tmp, "cow", f"{tmp}/events", merge_mode="cow")
-    mor = _replay(spark, tmp, "mor", f"{tmp}/events", merge_mode="mor", compact_threshold=10**9)
-    assert _digest(cow.table.read()) == _digest(mor.table.read())
+    mor = _replay(spark, tmp, "mor", f"{tmp}/events", compact_threshold=10**9)
     # generations really did pile up (delta files present)
     assert any(f.get("delta") for f in mor.table._current()["files"])
+    before = _digest(mor.table.read())
+    _assert_matches_oracle(mor.table.read(), ev.toPandas())
+
+    mor.table.compact_buckets(sorted(mor.table.bucket_delta_generations()))
+    assert not any(f.get("delta") for f in mor.table._current()["files"])
+    assert _digest(mor.table.read()) == before
+    _assert_matches_oracle(mor.table.read(), ev.toPandas())
 
 
 def test_mor_read_plan_has_no_exchange(spark, tmp_path):
@@ -66,7 +98,7 @@ def test_mor_read_plan_has_no_exchange(spark, tmp_path):
     tmp = str(tmp_path)
     ev = gen_change_events(spark, n_events=3000, n_keys=400)
     write_event_log(ev, f"{tmp}/events", epoch_size=500)
-    mor = _replay(spark, tmp, "plan", f"{tmp}/events", merge_mode="mor", compact_threshold=10**9)
+    mor = _replay(spark, tmp, "plan", f"{tmp}/events", compact_threshold=10**9)
     assert any(f.get("delta") for f in mor.table._current()["files"])  # deltas live
     df = mor.table.read()
     plan = df._jdf.queryExecution().executedPlan().toString()
@@ -82,31 +114,64 @@ def test_mor_read_cost_flat_in_generations(spark, tmp_path):
     tmp = str(tmp_path)
     ev = gen_change_events(spark, n_events=4000, n_keys=300)
     write_event_log(ev, f"{tmp}/events", epoch_size=400)  # 10 generations
-    mor = _replay(spark, tmp, "flat", f"{tmp}/events", merge_mode="mor", compact_threshold=10**9)
+    mor = _replay(spark, tmp, "flat", f"{tmp}/events", compact_threshold=10**9)
     gens = mor.table.bucket_delta_generations()
     assert max(gens.values(), default=0) >= 5
     plan = mor.table.read()._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan
 
 
-def test_fused_write_equals_jvm_write(spark, tmp_path):
-    """The fused task-writer sink (operators/cdc sink_spec + commit_delta_
-    files) must be a pure physical change: identical final state to the
-    JVM write path, with and without enrichment, and identical lineage
-    counts. Also pins that fused epochs really produced delta files."""
+def test_each_shape_sink_matches_oracle(spark, tmp_path, monkeypatch):
+    """Each shape's one physical path — enriched on the JVM writer,
+    replication on the fused task-writer sink (operators/cdc sink_spec +
+    commit_delta_files) — reproduces the fold oracle, and its lineage
+    n_keys/n_deletes equal per-epoch counts folded in pandas from the log."""
     tmp = str(tmp_path)
+    epoch_size = 1000
     ev = gen_change_events(spark, n_events=5000, n_keys=700, hot_frac=0.4)
-    write_event_log(ev, f"{tmp}/events", epoch_size=1000)
+    write_event_log(ev, f"{tmp}/events", epoch_size=epoch_size)
+    pdf = ev.toPandas()
 
+    # per epoch: one merge row per key touched, a delete when its last op is D
+    last = (
+        pdf.assign(epoch=pdf["seq"] // epoch_size)
+        .sort_values("seq", kind="mergesort")
+        .drop_duplicates(subset=["epoch", "repo", "path"], keep="last")
+    )
+    expected_lineage = {
+        int(e): (len(g), int((g["op"] == "D").sum()))
+        for e, g in last.groupby("epoch")
+    }
+
+    fused_calls = []
+    orig = CdcPipeline._apply_epoch_fused
+
+    def _spy(self, *a, **k):
+        fused_calls.append(self.cfg.pipeline_id)
+        return orig(self, *a, **k)
+
+    monkeypatch.setattr(CdcPipeline, "_apply_epoch_fused", _spy)
     for norm in (True, False):
-        a = _replay(spark, tmp, f"fw_on_{norm}", f"{tmp}/events",
-                    fused_write=True, normalize=norm, compact_threshold=3)
-        b = _replay(spark, tmp, f"fw_off_{norm}", f"{tmp}/events",
-                    fused_write=False, normalize=norm, compact_threshold=3)
-        assert _digest(a.table.read()) == _digest(b.table.read()), f"normalize={norm}"
-        la = {r["epoch"]: (r["n_keys"], r["n_deletes"]) for r in a._epoch_infos()}
-        lb = {r["epoch"]: (r["n_keys"], r["n_deletes"]) for r in b._epoch_infos()}
-        assert la == lb
+        name = f"sink_norm_{norm}"
+        pipe = _replay(spark, tmp, name, f"{tmp}/events",
+                       normalize=norm, compact_threshold=3)
+        _assert_matches_oracle(pipe.table.read(), pdf)
+        got = {r["epoch"]: (r["n_keys"], r["n_deletes"]) for r in pipe._epoch_infos()}
+        assert got == expected_lineage, f"normalize={norm}"
+        # enriched never takes the fused sink; replication always does
+        n_fused = fused_calls.count(name)
+        assert n_fused == (0 if norm else len(expected_lineage)), f"normalize={norm}"
+
+
+@pytest.mark.parametrize(
+    "field,value",
+    [("merge_mode", "cow"), ("compact_strategy", "winners"), ("compact_strategy", "agg")],
+)
+def test_removed_physical_paths_rejected(spark, tmp_path, field, value):
+    with pytest.raises(ValueError, match=value):
+        CdcPipeline(spark, PipelineConfig(
+            pipeline_id="x", table_dir=str(tmp_path / "t"), **{field: value}
+        ))
 
 
 def test_change_feed_matches_lineage(spark, tmp_path):
@@ -144,7 +209,7 @@ def test_mor_resume_mid_stream(spark, tmp_path):
     ev = gen_change_events(spark, n_events=5000, n_keys=700)
     write_event_log(ev, f"{tmp}/events", epoch_size=1000)
 
-    cfg = dict(merge_mode="mor", compact_threshold=3)
+    cfg = dict(compact_threshold=3)
     pipe = _replay(spark, tmp, "resume", f"{tmp}/events", **cfg)
     full = _digest(pipe.table.read())
 
@@ -191,7 +256,7 @@ def test_ranged_merge_boundary_edge_update(spark, tmp_path, monkeypatch):
     pipe = CdcPipeline(
         spark,
         PipelineConfig(pipeline_id="edge", table_dir=f"{tmp}/t", n_buckets=1,
-                       merge_mode="mor", compact_threshold=10**9),
+                       compact_threshold=10**9),
     )
     pipe.replay_event_dir(f"{tmp}/events")
     pipe.table.compact_buckets([0])  # one key-sorted base file, 40-row groups

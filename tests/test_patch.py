@@ -240,8 +240,6 @@ def test_patch_fold_survives_ranged_merge(spark, tmp_path, monkeypatch):
 def test_patch_resolve_config_guards(spark, tmp_path):
     with pytest.raises(ValueError, match="patch_resolve"):
         _pipe(spark, tmp_path, name="bad1", patch_resolve="defer")
-    with pytest.raises(ValueError, match="cow"):
-        _pipe(spark, tmp_path, name="bad2", patch_resolve="merge", merge_mode="cow")
 
 
 def test_orphan_only_epoch_reports_exact_metrics(spark, tmp_path):

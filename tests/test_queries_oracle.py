@@ -77,3 +77,13 @@ def test_query_vs_oracle(spark, ddb, name):
             (i, x, y) for i, (x, y) in enumerate(zip(ga, ea)) if not _values_equal(x, y)
         ]
         assert not bad, f"{name}.{c}: first mismatches {bad[:5]}"
+
+
+def test_stratified_split_oracle_sum_is_bigint(spark, ddb):
+    """DuckDB widens sum(BIGINT) to HUGEINT, which reaches pandas as
+    float64, so a dtype-sensitive value hash no longer matches Spark's
+    long; the oracle casts the sum back to BIGINT."""
+    exp = ddb.execute(ORACLES["sample_stratified_split"]).fetchdf()
+    assert exp["sum_chars"].dtype == "int64"
+    got = QUERIES["sample_stratified_split"](spark, SF_DIR).toPandas()
+    assert got["sum_chars"].dtype == exp["sum_chars"].dtype

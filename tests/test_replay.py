@@ -54,12 +54,6 @@ def test_replay_matches_oracle(spark, tmp_path):
     assert table_digest(got_pd) == table_digest(expected)
 
 
-def test_replay_with_salting_identical(spark, tmp_path):
-    """C4 two-phase salted compaction must not change results."""
-    pipe, events, _ = _replay(spark, tmp_path, salt_partitions=4)
-    _check_against_oracle(pipe, events)
-
-
 def test_normalized_columns_populated(spark, tmp_path):
     pipe, events, _ = _replay(spark, tmp_path, n_events=1000, n_keys=100)
     row = pipe.table.read().where(F.col("content").isNotNull()).first()

@@ -41,7 +41,7 @@ def _digest(df):
     "cfg",
     [
         {},  # JVM writer path (enriched default)
-        {"normalize": False, "fused_write": True},  # fused task-writer (true WAP)
+        {"normalize": False},  # replication shape: fused task-writer (true WAP)
     ],
     ids=["jvm", "fused"],
 )
